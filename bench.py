@@ -108,10 +108,24 @@ _BASELINE = {
 }
 
 
+class Normalized(tuple):
+    """``(host_factor, normalized)`` — unpacks like the plain pair —
+    plus ``anchored``: True when the median came from the caller's
+    anchor set, False when it is the all-query median (no anchors
+    given, or none of them had a ratio)."""
+
+    anchored: bool
+
+    def __new__(cls, host_factor, normalized, anchored: bool):
+        self = super().__new__(cls, (host_factor, normalized))
+        self.anchored = anchored
+        return self
+
+
 def normalize_ratios(
     ratios: dict[str, float],
     anchors: list[str] | None = None,
-) -> tuple[float | None, dict[str, float]]:
+) -> Normalized:
     """Steal-proof normalization (VERDICT r7 #2, SCALE.md §9k): divide
     each query's baseline ratio by the within-run MEDIAN of ratios.
 
@@ -133,24 +147,24 @@ def normalize_ratios(
     median (the steal estimate) is then computed over those only, so
     touched-query improvements cannot shift untouched queries'
     normalized ratios. ``bench.py`` itself has no touched-set knowledge
-    and keeps the all-query median (``anchors=None``)."""
+    and keeps the all-query median (``anchors=None``). When no anchor
+    has a ratio the all-query median is used instead, and the result's
+    ``anchored`` flag says so."""
     vals = sorted(v for v in ratios.values() if v is not None)
-    if anchors is not None:
-        anchor_vals = sorted(
-            v
-            for k, v in ratios.items()
-            if v is not None and k in set(anchors)
-        )
-        if anchor_vals:
-            vals = anchor_vals
-    if not vals:
-        return None, {}
-    med = statistics.median(vals)
+    anchor_vals = sorted(
+        v for k, v in ratios.items() if v is not None and k in set(anchors or ())
+    )
+    if anchor_vals:
+        vals = anchor_vals
+    anchored = bool(anchor_vals)
+    med = statistics.median(vals) if vals else 0
     if med <= 0:
-        return None, {}
-    return round(med, 3), {
-        k: round(v / med, 3) for k, v in ratios.items() if v is not None
-    }
+        return Normalized(None, {}, anchored)
+    return Normalized(
+        round(med, 3),
+        {k: round(v / med, 3) for k, v in ratios.items() if v is not None},
+        anchored,
+    )
 
 
 def main() -> None:

@@ -32,6 +32,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from etl__project_spark.operators import (
     build_fact,
@@ -99,20 +100,26 @@ class ParquetWarehouse:
             return None
 
     def read(
-        self, table: str, schema: T.StructType, version: int | None = None
+        self, table: str, schema: T.StructType | None, version: int | None = None
     ) -> DataFrame:
         """Read the current snapshot, or — time travel — any retained
         older ``version``: snapshots are immutable directories and the
         pointer swap never deletes them, so audits/debugging/reprocessing
         can read the table exactly as of an earlier publish (the same
-        contract Delta/Iceberg expose as VERSION AS OF)."""
+        contract Delta/Iceberg expose as VERSION AS OF).
+
+        ``schema`` goes to the reader, so building the frame launches no
+        footer-inference job (layout partition columns are still
+        discovered from the directory names and stripped);
+        ``schema=None`` infers it from the files."""
         v = self._current(table) if version is None else version
         if v is None:
             return empty_frame(self.spark, schema)
         path = os.path.join(self._tdir(table), f"v{v}")
         if version is not None and not os.path.isdir(path):
             raise ValueError(f"{table} has no retained version {version}")
-        return self._strip_layout_cols(self.spark.read.parquet(path))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return self._strip_layout_cols(reader.parquet(path))
 
     @staticmethod
     def _strip_layout_cols(df: DataFrame) -> DataFrame:
@@ -218,22 +225,46 @@ class ParquetWarehouse:
             if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", str(dim)):
                 _dir_zone_maps_cached(path, dim)
 
+    def _commit_version(self, table: str, write) -> int:
+        """The versioned publish protocol shared by every snapshot
+        writer: claim ``v = CURRENT + 1`` (the CAS), ``write(path,
+        base)`` the new version directory, then atomically swap the
+        pointer.
+
+        A write that fails in-process removes its partial ``v<N>`` and
+        its ``.meta`` and releases its own claim, so the retry proceeds
+        instead of tripping over a claim nobody holds. A killed writer
+        cannot clean up: its claim stays and blocks the next publish
+        loudly until ``force_release``."""
+        import shutil
+
+        base = self._current(table)
+        v = (base or 0) + 1
+        self._claim_version(table, v, base)
+        path = os.path.join(self._tdir(table), f"v{v}")
+        try:
+            write(path, base)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            if os.path.exists(f"{path}.meta"):
+                os.remove(f"{path}.meta")
+            self.force_release(table, v)
+            raise
+        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
+        with open(tmp, "w") as fh:
+            fh.write(str(v))
+        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
+        return v
+
     def publish(self, table: str, df: DataFrame, layout=None) -> int:
         """Write a new full snapshot, then atomically swap the pointer.
         Optimistic CAS via the version claim: concurrent publishes of
         the same table raise ConcurrentWriteError instead of silently
         last-writer-wins. ``layout``: optional ZOrderLayout applied to
         the snapshot files (multi-dimensional data skipping on read)."""
-        base = self._current(table)
-        v = (base or 0) + 1
-        self._claim_version(table, v, base)
-        path = os.path.join(self._tdir(table), f"v{v}")
-        self._layout_write(df, layout, path)
-        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
-        return v
+        return self._commit_version(
+            table, lambda path, _base: self._layout_write(df, layout, path)
+        )
 
     def publish_delta(self, table: str, delta: DataFrame) -> int:
         """Publish ``current ∪ delta`` WITHOUT rewriting the current
@@ -253,31 +284,44 @@ class ParquetWarehouse:
         rows, same schema; the CAS claim protocol, pointer swap, crash
         behavior (an unswapped version dir is invisible; a dead
         writer's claim blocks loudly), and read path are unchanged.
-        Falls back to copying when the filesystem refuses hardlinks.
+
+        Base files keep their own names in the new version (part files
+        carry a per-write UUID); only a name the delta write already
+        took is prefixed, so names stay bounded however many versions a
+        file is carried through. A base version that keeps data in
+        subdirectories (a ``partitionBy`` layout) raises ValueError
+        before any data is written: linking only its top level would
+        silently drop those rows. Falls back to copying when the
+        filesystem refuses hardlinks.
         """
         import shutil
 
-        base = self._current(table)
-        v = (base or 0) + 1
-        self._claim_version(table, v, base)
-        path = os.path.join(self._tdir(table), f"v{v}")
-        delta.write.mode("overwrite").parquet(path)
-        if base is not None:
+        def write(path: str, base: int | None) -> None:
             bdir = os.path.join(self._tdir(table), f"v{base}")
-            for f in os.listdir(bdir):
+            base_files = [] if base is None else os.listdir(bdir)
+            if any(os.path.isdir(os.path.join(bdir, f)) for f in base_files):
+                raise ValueError(
+                    f"{table} v{base} keeps data in partition subdirectories; "
+                    "publish_delta links flat snapshots only — use publish"
+                )
+            delta.write.mode("overwrite").parquet(path)
+            taken = set(os.listdir(path))
+            for f in base_files:
                 if not f.endswith(".parquet"):
                     continue
+                name, n = f, 0
+                while name in taken:
+                    n += 1
+                    name = f"dup{n}-{f}"
+                taken.add(name)
                 src = os.path.join(bdir, f)
-                dst = os.path.join(path, f"base-{base}-{f}")
+                dst = os.path.join(path, name)
                 try:
                     os.link(src, dst)
                 except OSError:
                     shutil.copy2(src, dst)
-        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
-        return v
+
+        return self._commit_version(table, write)
 
     def _merged_ids(self, table: str) -> set[str]:
         v = self._current(table)
@@ -305,9 +349,9 @@ class ParquetWarehouse:
         Commit protocol: the new version directory and its ``.meta``
         (cumulative merged-id set) are written first; the atomic CURRENT
         pointer swap makes data + merged-set visible together, so a crash
-        at any point leaves either the old state (retry re-merges — the
-        half-written version dir is simply overwritten) or the complete
-        new one (retry no-ops). Intended for SMALL aggregated state
+        at any point leaves either the old state (retry re-merges — an
+        in-process failure removed the half-written version dir and its
+        claim) or the complete new one (retry no-ops). Intended for SMALL aggregated state
         (rollups): each publish rewrites the table, which is fine when
         the table is orders of magnitude smaller than the raw history —
         at real scale, partition the rollup and rewrite only the
@@ -317,17 +361,13 @@ class ParquetWarehouse:
         if batch_id in done:
             return False
         merged = merge_fn(self.read(table, schema), delta)
-        base = self._current(table)
-        v = (base or 0) + 1
-        self._claim_version(table, v, base)
-        path = os.path.join(self._tdir(table), f"v{v}")
-        merged.write.mode("overwrite").parquet(path)
-        with open(os.path.join(self._tdir(table), f"v{v}.meta"), "w") as fh:
-            json.dump({"merged": sorted(done | {batch_id})}, fh)
-        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
+
+        def write(path: str, _base: int | None) -> None:
+            merged.write.mode("overwrite").parquet(path)
+            with open(f"{path}.meta", "w") as fh:
+                json.dump({"merged": sorted(done | {batch_id})}, fh)
+
+        self._commit_version(table, write)
         return True
 
     # --- append-only fact -------------------------------------------------
@@ -735,8 +775,9 @@ def load_batch(
 
     - dim upserts are idempotent in CONTENT — SCD1 only appends NEW
       natural keys with skeys continuing past max(skey), so a re-run
-      over the same staging rows republishes an identical table (a new
-      version number, same rows) and every already-issued skey is stable;
+      over the same staging rows finds no new keys for the dims already
+      published and leaves them as they are; every already-issued skey
+      is stable;
     - the fact append is idempotent in PRESENCE — keyed by batch_id,
       committed by ``_SUCCESS``; a partial fact directory (no marker) is
       invisible to readers and simply overwritten on retry;
@@ -825,28 +866,39 @@ def load_batch(
         table_sized=False,
     )
 
-    # The four publishes touch disjoint table directories, so their
-    # write jobs run concurrently from a thread pool: wall time is the
-    # slowest dim, not the sum. On a cluster the concurrent jobs share
-    # executors (FAIR scheduling overlaps their stages).
+    # A dim that exists and gets no new keys is not republished: its
+    # current snapshot already is current ∪ delta, and an empty publish
+    # would only add a metadata-only version (and one more linked file)
+    # per batch. A dim with no version yet is published even when empty,
+    # so every dim exists after the first load.
+    changed = {r["__dim"] for r in numbered.select("__dim").distinct().collect()}
+
+    # The publishes touch disjoint table directories, so their write
+    # jobs run concurrently from a thread pool: wall time is the slowest
+    # dim, not the sum. On a cluster the concurrent jobs share executors
+    # (FAIR scheduling overlaps their stages). The pool threads inherit
+    # the caller's job group and description.
     def _publish_dim(spec_i: tuple[int, tuple[str, str, str]]) -> tuple[str, DataFrame, str]:
         i, (table, nk, skey) = spec_i
         # O(churn) publish (guide §1.2): the new version hardlinks the
         # current snapshot's files and writes ONLY this batch's new keys
         # — content-identical to publishing current ∪ delta, without
         # rewriting (or re-planning a scan of) the whole dim per batch.
-        wh.publish_delta(
-            table,
-            numbered.filter(F.col("__dim") == i).select(
-                F.col("__skey").alias(skey), F.col("__key").alias(nk)
-            ),
-        )
+        if i in changed or wh._current(table) is None:
+            wh.publish_delta(
+                table,
+                numbered.filter(F.col("__dim") == i).select(
+                    F.col("__skey").alias(skey), F.col("__key").alias(nk)
+                ),
+            )
         return skey, wh.read(table, _dim_schema(nk, skey)), nk
 
     with ThreadPoolExecutor(max_workers=len(DIM_SPECS)) as pool:
         dims = {
             skey: (df, nk, nk)
-            for skey, df, nk in pool.map(_publish_dim, enumerate(DIM_SPECS))
+            for skey, df, nk in pool.map(
+                inheritable_thread_target(spark)(_publish_dim), enumerate(DIM_SPECS)
+            )
         }
 
     limit_kw = (
@@ -1182,7 +1234,11 @@ def _bloom_position_cols(key_col: str, n_bits: int = BLOOM_BITS, k: int = BLOOM_
 
 
 def index_fact_batch(
-    wh: ParquetWarehouse, table: str, batch_id: str, key_col: str
+    wh: ParquetWarehouse,
+    table: str,
+    batch_id: str,
+    key_col: str,
+    schema: T.StructType | None = None,
 ) -> int:
     """Build the bloom data-skipping index for one landed fact batch:
     the distinct bit positions of every key in the batch (ONE distributed
@@ -1197,12 +1253,15 @@ def index_fact_batch(
     provably lack the key. This is the file-skipping half of what
     Delta/Iceberg keep as column stats + bloom metadata, and the stored
     complement of the query-time runtime filter (`tpch_bloom_prune_join`).
-    Returns the number of bits set.
+    ``schema``: the table's declared schema, which spares the read a
+    footer-inference job (``None`` infers it). Returns the number of
+    bits set.
     """
     bdir = wh.fact_batch_dir(table, batch_id)
     if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
         raise ValueError(f"batch {batch_id!r} of {table!r} is not landed")
-    df = wh.spark.read.parquet(bdir)
+    reader = wh.spark.read if schema is None else wh.spark.read.schema(schema)
+    df = reader.parquet(bdir)
     pos = (
         df.select(
             F.explode(F.array(*_bloom_position_cols(key_col))).alias("p")
@@ -1331,8 +1390,14 @@ def read_fact_point(
     scan of those. At 100 TB with daily batches this is the difference
     between scanning every partition for one key and scanning the
     handful whose bloom fires — the same contract as Delta's file-level
-    bloom skipping, kept honest here by the no-false-negative test."""
+    bloom skipping, kept honest here by the no-false-negative test.
+    The surviving directories are read as ``schema``, so building the
+    frame launches no footer-inference job."""
     dirs, _ = prune_dirs_for_key(wh, table, key_col, value)
     if not dirs:
         return empty_frame(wh.spark, schema)
-    return wh.spark.read.parquet(*dirs).filter(F.col(key_col) == F.lit(value))
+    return (
+        wh.spark.read.schema(schema)
+        .parquet(*dirs)
+        .filter(F.col(key_col) == F.lit(value))
+    )

@@ -7,6 +7,8 @@ documents embeddings — one parquet file each under
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -91,10 +93,27 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 # pinned session confs _ensure_session_confs establishes before every
 # read) is the schema forever — exactly the metadata a metastore or
 # table format would hand the planner for free. Keyed on (mtime, size)
-# so a regenerated scratch fixture at the same path re-infers. This
-# caches METADATA only — never rows, never results; every load still
-# scans the parquet.
-_SCHEMA_CACHE: dict[tuple[str, float, int], T.StructType] = {}
+# so a regenerated scratch fixture at the same path re-infers; a
+# directory dataset is keyed on every file under it with its (mtime,
+# size), because rewriting a file in place leaves the directory's own
+# mtime unchanged. This caches METADATA only — never rows, never
+# results; every load still scans the parquet.
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+
+
+def _schema_cache_key(path: str) -> tuple | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None  # directory-less/remote path: plain inference
+    if not os.path.isdir(path):
+        return (path, st.st_mtime, st.st_size)
+    files = []
+    for d, _dirs, names in os.walk(path):
+        for n in names:
+            fst = os.stat(os.path.join(d, n))
+            files.append((os.path.join(d, n), fst.st_mtime, fst.st_size))
+    return (path, tuple(sorted(files)))
 
 
 def load_table(
@@ -106,16 +125,9 @@ def load_table(
     either way and the round-robin shuffle is a pure extra stage before
     the driver collects the side anyway (guide §2.1: remove shuffles
     whose output ordering/partitioning nobody needs)."""
-    import os
-
     _ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = None
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime, st.st_size)
-    except OSError:
-        pass  # directory-less/remote path: fall through to plain inference
+    key = _schema_cache_key(path)
     schema = _SCHEMA_CACHE.get(key) if key is not None else None
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)

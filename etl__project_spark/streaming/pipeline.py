@@ -9,8 +9,11 @@ Reference mapping:
 - T2 CDC stream            → each micro-batch IS the delta
 - T3 scheduled+gated task  → trigger(availableNow) for catch-up semantics
   or processingTime for a cadence; the has-data gate is inherent
-- T4 task DAG              → parse → dedup-merge → dim upsert → fact
-  append chained as plain function calls inside the batch fn
+- T4 task DAG              → dedup-merge → credit append, then the four
+  branches after the append (star load, bloom index, minute rollup, HLL
+  fold) run concurrently, like sibling tasks under one predecessor in
+  the reference's task DAG; each takes its input from the landed batch
+  directory
 - T5 MERGE dedup           → within-batch dropDuplicates + left-anti vs
   already-landed raw rows, then idempotent batch-id fact append
 
@@ -31,17 +34,23 @@ watermark-bounded state.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from etl__project_spark.operators.rollup import merge_rollups
 from etl__project_spark.session import empty_frame, state_checkpoint
 from etl__project_spark.plans.star_load import (
     ConcurrentWriteError,
     ParquetWarehouse,
+    gc_fact,
+    index_fact_batch,
+    join_stats_from_warehouse,
     load_batch,
+    should_recluster,
 )
 from etl__project_spark.sources.readers import RAW_SCHEMA
 
@@ -53,23 +62,13 @@ ROLLUP_SCHEMA = T.StructType(
 _ROLLUP_MERGES = {"n": lambda c: F.sum(c).alias(c)}
 
 
-def _maintain_rollup(
-    wh: ParquetWarehouse, spark: SparkSession, batch_id: str
-) -> None:
-    """Fold this batch's landed rows into the per-minute rollup table —
+def _maintain_rollup(wh: ParquetWarehouse, rows: DataFrame, batch_id: str) -> None:
+    """Fold one landed batch's rows into the per-minute rollup table —
     the streaming face of ``operators/rollup.py``: O(batch + rollup) per
-    micro-batch, never a recompute over raw history. Reads the batch's
-    OWN credit directory (not the in-memory frame), so a foreachBatch
-    retry that crashed between the raw append and this merge still
-    catches up; ``publish_merged`` makes the merge itself exactly-once
-    per batch id."""
-    bdir = wh.fact_batch_dir("credit", batch_id)
-    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
-        return
-    part = (
-        spark.read.parquet(bdir)
-        .groupBy(F.substring("DateTime", 1, 16).alias("minute"))
-        .agg(F.count(F.lit(1)).alias("n"))
+    micro-batch, never a recompute over raw history. ``publish_merged``
+    makes the merge exactly-once per batch id."""
+    part = rows.groupBy(F.substring("DateTime", 1, 16).alias("minute")).agg(
+        F.count(F.lit(1)).alias("n")
     )
     wh.publish_merged(
         "rollup_minute",
@@ -82,34 +81,85 @@ def _maintain_rollup(
     )
 
 
-def _maintain_hll(wh: ParquetWarehouse, spark: SparkSession, batch_id: str) -> None:
-    """Fold this batch's landed rows into a persistent HLL register table
+def _maintain_hll(wh: ParquetWarehouse, rows: DataFrame, batch_id: str) -> None:
+    """Fold one landed batch's rows into a persistent HLL register table
     (distinct VideoTitle sketch) — streaming observability at fixed cost:
     per-batch state is <= 64 (reg, rho) longs and the combine is a
     register-wise max, so replays/out-of-order merges are harmless by
-    algebra (``datapipe/sketches.py``). Same retry-catchup read-from-
-    batch-dir discipline as ``_maintain_rollup``; ``publish_merged``
-    makes the fold exactly-once per batch id. The maintained sketch
-    hash-equals a one-shot sketch of all landed rows (mergeability —
-    pinned by test), so downstream reads one tiny table instead of
-    re-scanning raw history for a COUNT(DISTINCT)."""
+    algebra (``datapipe/sketches.py``). ``publish_merged`` makes the
+    fold exactly-once per batch id. The maintained sketch hash-equals a
+    one-shot sketch of all landed rows (mergeability — pinned by test),
+    so downstream reads one tiny table instead of re-scanning raw
+    history for a COUNT(DISTINCT)."""
     from etl__project_spark.datapipe.sketches import (
         HLL_SCHEMA,
         hll_merge,
         hll_registers,
     )
 
-    bdir = wh.fact_batch_dir("credit", batch_id)
-    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
-        return
-    part = hll_registers(spark.read.parquet(bdir), "VideoTitle")
     wh.publish_merged(
         "hll_videotitle",
-        part,
+        hll_registers(rows, "VideoTitle"),
         HLL_SCHEMA,
         batch_id,
         lambda existing, delta: hll_merge(existing, delta),
     )
+
+
+def _load_landed_batch(
+    wh: ParquetWarehouse,
+    spark: SparkSession,
+    batch_id: str,
+    join_stats_sources: tuple[dict, dict] | None,
+    broadcast_row_limit: int | None,
+) -> None:
+    """T4's sibling tasks under the credit append: the star load, the
+    bloom index, the rollup and the HLL fold. Each takes its input from
+    the landed ``credit/batch=<id>`` directory and writes its own
+    tables, so they run concurrently — wall time is the slowest branch,
+    not the sum.
+    Every branch waits to finish before the first failure re-raises, so
+    a failed branch fails the micro-batch (the stream replays it) and
+    never leaves a sibling mid-write. All four are idempotent per batch
+    id: a replay redoes only what did not land."""
+    rows = spark.read.schema(RAW_SCHEMA).parquet(wh.fact_batch_dir("credit", batch_id))
+
+    def star_load() -> None:
+        # Maintained planner statistics (VERDICT r10 #4): the batch path
+        # (load_batch callers) already consults join_stats_from_warehouse;
+        # the streaming star load must too, re-reading the maintained
+        # state EVERY micro-batch — a dim that outgrows broadcast
+        # mid-stream flips the very next batch's fact plan to the salted
+        # shuffle instead of OOMing a hardcoded broadcast. Bounded cost:
+        # one 1-row aggregate per tracked dim over KB-to-MB stats state.
+        join_stats = None
+        if join_stats_sources is not None:
+            cms_grids, analyze_ndv = join_stats_sources
+            join_stats = join_stats_from_warehouse(
+                wh, cms_grids=cms_grids, analyze_ndv=analyze_ndv
+            )
+        load_batch(
+            rows,
+            wh,
+            batch_id=batch_id,
+            spark=spark,
+            join_stats=join_stats,
+            broadcast_row_limit=broadcast_row_limit,
+        )
+
+    branches = [
+        star_load,
+        # bloom-index the landed raw batch (point-lookup file skipping:
+        # "which batch dirs hold VideoTitle X" without reading them).
+        # Advisory by design: an unindexed dir is simply always read.
+        lambda: index_fact_batch(wh, "credit", batch_id, "VideoTitle", RAW_SCHEMA),
+        lambda: _maintain_rollup(wh, rows, batch_id),
+        lambda: _maintain_hll(wh, rows, batch_id),
+    ]
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in branches]
+    for f in futures:
+        f.result()
 
 
 def _process_batch(
@@ -123,75 +173,45 @@ def _process_batch(
     join_stats_sources: tuple[dict, dict] | None = None,
     broadcast_row_limit: int | None = None,
 ) -> None:
+    bid = str(batch_id)
     # T5: dedup within the batch, then against every already-landed row
     # (re-delivered files insert nothing the second time). The landed
     # history is only READ here; the write below is the fresh rows alone.
     landed = wh.read_fact("credit", RAW_SCHEMA)
     fresh = batch.dropDuplicates().join(landed, list(batch.columns), "left_anti")
     fresh = fresh.persist()
-    if fresh.count() > 0:
-        # Optional per-batch quality gate (operators/quality.py): every
-        # check evaluates in ONE fused aggregate pass over the cached
-        # batch; a failing batch is QUARANTINED — written idempotently
-        # to its own quarantine batch dir for inspection/replay — and
-        # never reaches the raw table, the star load, or the serving
-        # rollup (the gate is the streaming face of K5's precondition
-        # discipline: bad input halts the batch, not the stream).
-        if quality_checks is not None:
-            from etl__project_spark.operators.quality import fused_checks
+    try:
+        if fresh.count() > 0:
+            # Optional per-batch quality gate (operators/quality.py): every
+            # check evaluates in ONE fused aggregate pass over the cached
+            # batch; a failing batch is QUARANTINED — written idempotently
+            # to its own quarantine batch dir for inspection/replay — and
+            # never reaches the raw table, the star load, or the serving
+            # rollup (the gate is the streaming face of K5's precondition
+            # discipline: bad input halts the batch, not the stream).
+            if quality_checks is not None:
+                from etl__project_spark.operators.quality import fused_checks
 
-            report = fused_checks(fresh, "stream_batch", quality_checks)
-            if report.filter(~F.col("passed")).limit(1).count() > 0:
-                wh.fact_append("quarantine", fresh, batch_id=str(batch_id))
-                fresh.unpersist()
-                return
-        wh.fact_append("credit", fresh, batch_id=str(batch_id))
-        # Maintained planner statistics (VERDICT r10 #4): the batch path
-        # (load_batch callers) already consults join_stats_from_warehouse;
-        # the streaming star load must too, re-reading the maintained
-        # state EVERY micro-batch — a dim that outgrows broadcast
-        # mid-stream flips the very next batch's fact plan to the salted
-        # shuffle instead of OOMing a hardcoded broadcast. Bounded cost:
-        # one 1-row aggregate per tracked dim over KB-to-MB stats state.
-        join_stats = None
-        if join_stats_sources is not None:
-            from etl__project_spark.plans.star_load import (
-                join_stats_from_warehouse,
-            )
-
-            cms_grids, analyze_ndv = join_stats_sources
-            join_stats = join_stats_from_warehouse(
-                wh, cms_grids=cms_grids, analyze_ndv=analyze_ndv
-            )
-        load_batch(
-            fresh,
-            wh,
-            batch_id=str(batch_id),
-            spark=spark,
-            join_stats=join_stats,
-            broadcast_row_limit=broadcast_row_limit,
-        )
-        # bloom-index the landed raw batch at ingest (point-lookup file
-        # skipping: "which batch dirs hold VideoTitle X" without reading
-        # them). Advisory by design — if the process dies between the
-        # append above and this index write, the unindexed dir is simply
-        # always read; a retried batch re-indexes idempotently.
-        from etl__project_spark.plans.star_load import index_fact_batch
-
-        index_fact_batch(wh, "credit", str(batch_id), "VideoTitle")
-    fresh.unpersist()
-    # incremental serving-aggregate maintenance (runs even when fresh is
-    # empty: a retried batch whose append landed pre-crash catches up here)
-    _maintain_rollup(wh, spark, str(batch_id))
-    _maintain_hll(wh, spark, str(batch_id))
+                report = fused_checks(fresh, "stream_batch", quality_checks)
+                if report.filter(~F.col("passed")).limit(1).count() > 0:
+                    wh.fact_append("quarantine", fresh, batch_id=bid)
+                    return
+            wh.fact_append("credit", fresh, batch_id=bid)
+    finally:
+        fresh.unpersist()
+    # Everything downstream of the credit append runs from the landed
+    # batch directory whenever its _SUCCESS exists — on the first attempt
+    # and on a replay alike. A retried batch whose append landed before
+    # the failure dedups to an empty ``fresh`` above, yet still reaches
+    # the fact, the index and the serving aggregates here.
+    if os.path.exists(os.path.join(wh.fact_batch_dir("credit", bid), "_SUCCESS")):
+        _load_landed_batch(wh, spark, bid, join_stats_sources, broadcast_row_limit)
     # periodic small-files maintenance: fold accumulated batch dirs into
     # one compacted dir (manifest-committed; absorbed ids stay idempotent),
     # then reclaim any crash garbage a previous cycle's best-effort
     # deletes left behind (gc_fact — safe here precisely because
     # foreachBatch serializes micro-batches: no concurrent writer).
     if compact_every and (batch_id + 1) % compact_every == 0:
-        from etl__project_spark.plans.star_load import gc_fact
-
         wh.compact_fact("credit")
         wh.compact_fact("factvideostart")
         gc_fact(wh, "credit")
@@ -202,8 +222,6 @@ def _process_batch(
     # threshold fraction of files — the lakehouse OPTIMIZE scheduler as
     # a streaming callback. Footer-only, O(files) per batch.
     if recluster is not None:
-        from etl__project_spark.plans.star_load import should_recluster
-
         probe_col, layout, threshold = recluster
         trig, _stats = should_recluster(
             wh, "factvideostart", probe_col, threshold
@@ -708,7 +726,9 @@ RC_ROLLUP_SCHEMA = T.StructType(
     [
         T.StructField("g", T.LongType()),
         T.StructField("n", T.LongType()),
-        T.StructField("total", T.DecimalType(18, 2)),
+        # the type the signed sum stores: Σ sign·v over decimal(18,2)
+        # operands widens to decimal(38,4)
+        T.StructField("total", T.DecimalType(38, 4)),
         T.StructField("vmin", T.DecimalType(18, 2)),
         T.StructField("vmax", T.DecimalType(18, 2)),
     ]

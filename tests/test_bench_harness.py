@@ -84,3 +84,14 @@ def test_anchor_set_with_no_usable_anchors_falls_back_to_all():
     factor, norm = normalize_ratios(ratios, anchors=["c", "nope"])
     assert factor == pytest.approx(2.0)
     assert set(norm) == {"a", "b"}
+
+
+def test_anchor_fallback_is_flagged():
+    """The fallback to the all-query median is visible to the caller:
+    ``anchored`` is False without anchors and when no anchor had a
+    ratio, True when the median came from the anchors."""
+    ratios = {"a": 2.0, "b": 2.0, "c": None}
+    assert normalize_ratios(ratios).anchored is False
+    assert normalize_ratios(ratios, anchors=["c", "nope"]).anchored is False
+    assert normalize_ratios(ratios, anchors=["a"]).anchored is True
+    assert normalize_ratios({}, anchors=["a"]) == (None, {})

@@ -145,3 +145,22 @@ def test_orc_scan_pushes_filters(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters: [IsNotNull(k), EqualTo(k,3)]" in plan
+
+
+def test_schema_cache_sees_a_directory_rewritten_in_place(spark, tmp_path):
+    """ADVICE r12: a directory dataset rewritten in place keeps its own
+    mtime, so the schema cache keys on the files under it — the second
+    load sees the new column instead of the stale cached schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl__project_spark.sources.tables import load_table
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1, 2]}), d / "part-0.parquet")
+    st = os.stat(d)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), d / "part-0.parquet")
+    os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]

@@ -791,14 +791,164 @@ def test_publish_delta_links_base_and_appends_only_churn(spark, tmp_path):
     assert sorted(
         (r["skey"], r["nk"]) for r in wh.read("dim", schema, version=1).collect()
     ) == [(0, "a"), (1, "b")]
-    # the v2 directory reuses v1's files by link, not by rewrite
+    # the v2 directory reuses v1's files by link, not by rewrite, under
+    # their own names
+    v1_dir = os.path.join(str(tmp_path / "wh"), "dim", "v1")
     v2_dir = os.path.join(str(tmp_path / "wh"), "dim", "v2")
-    linked = [f for f in os.listdir(v2_dir) if f.startswith("base-1-")]
+    linked = [f for f in os.listdir(v1_dir) if f.endswith(".parquet")]
     assert linked, "base snapshot files were not carried into the new version"
     for f in linked:
-        src = os.path.join(str(tmp_path / "wh"), "dim", "v1", f[len("base-1-"):])
-        assert os.path.samefile(os.path.join(v2_dir, f), src)
+        assert os.path.samefile(os.path.join(v2_dir, f), os.path.join(v1_dir, f))
     # CAS: a held claim on the next version fails the publish loudly
     wh._claim_version("dim", 3, 2)
     with pytest.raises(ConcurrentWriteError):
         wh.publish_delta("dim", spark.createDataFrame([(3, "d")], schema))
+
+
+def _jobs_launched(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` launches, read from the status
+    store under a job group of their own."""
+    sc = spark.sparkContext
+    group = f"probe-{id(fn)}"
+    sc.setJobGroup(group, "jobs launched by one call")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_publish_delta_names_stay_bounded_over_40_versions(spark, tmp_path):
+    """ROADMAP 0a: carried base files keep their own names, so 40
+    consecutive publishes (the star load used to die at the 26th with
+    ENAMETOOLONG) leave every name as short as a fresh part file, and
+    each version reads back complete."""
+    import os
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("skey", T.LongType()), T.StructField("nk", T.StringType())]
+    )
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    for i in range(40):
+        assert wh.publish_delta(
+            "dim", spark.createDataFrame([(i, f"k{i}")], schema)
+        ) == i + 1
+        assert wh.read("dim", schema).count() == i + 1
+    names = [n for _d, _s, ns in os.walk(wh._tdir("dim")) for n in ns]
+    fresh = max(
+        len(n) for n in os.listdir(os.path.join(wh._tdir("dim"), "v1"))
+    )
+    assert max(len(n) for n in names) <= fresh
+    assert sorted(r["skey"] for r in wh.read("dim", schema).collect()) == list(range(40))
+
+
+def test_load_batch_40_consecutive_batches(spark, tmp_path):
+    """40 load_batch calls in a row, each adding one new minute: the
+    date dim publishes every time and stays readable; the dims whose
+    delta is empty are not republished at all."""
+    from etl__project_spark.plans.star_load import DIM_SPECS, _dim_schema
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    date_schema = _dim_schema("datetime", "datetime_skey")
+    for i in range(40):
+        raw = spark.createDataFrame(
+            [(f"2017-01-11T{i // 60:02d}:{i % 60:02d}:31.000Z", "news|video A", "206")],
+            "DateTime string, VideoTitle string, events string",
+        )
+        assert load_batch(raw, wh, f"b{i}", spark)["fact_appended"] == 1
+        assert wh.read("dimdate", date_schema).count() == i + 1
+    assert audit(wh) == {
+        "dimdate": 40,
+        "dimplatform": 1,
+        "dimsite": 1,
+        "dimtitle": 1,
+        "factvideostart": 40,
+    }
+    assert len(wh.versions("dimdate")) == 40
+    for table, _nk, _skey in DIM_SPECS[1:]:
+        assert wh.versions(table) == [1], table
+    skeys = sorted(r["datetime_skey"] for r in wh.read("dimdate", date_schema).collect())
+    assert skeys == list(range(40))
+
+
+def test_publish_delta_refuses_a_partitioned_base(spark, tmp_path):
+    """ADVICE r12 #2: linking only a partitioned base's top level would
+    drop the rows under its subdirectories. publish_delta raises instead,
+    and leaves no claim or version directory behind."""
+    import os
+
+    from etl__project_spark.operators.layout import ZOrderLayout
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    df = spark.range(16).selectExpr("id AS ub", "id % 4 AS vb")
+    layout = ZOrderLayout(dim_a="ub", dim_b="vb", bits=4, n_files=4, equal_width=True)
+    assert wh.publish("t", df, layout=layout) == 1
+    with pytest.raises(ValueError, match="partition"):
+        wh.publish_delta("t", df.limit(1))
+    assert wh._current("t") == 1
+    assert not os.path.exists(os.path.join(wh._tdir("t"), "v2"))
+    assert not os.path.exists(wh._claim_path("t", 2))
+    assert wh.read("t", df.schema).count() == 16
+
+
+def test_failed_publish_releases_its_claim(spark, tmp_path):
+    """A write that fails in-process removes its partial version and
+    releases its own claim, so the retry succeeds instead of raising
+    ConcurrentWriteError until someone calls force_release."""
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("skey", T.LongType()), T.StructField("nk", T.StringType())]
+    )
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    good = spark.createDataFrame([(0, "a")], schema)
+    assert wh.publish_delta("dim", good) == 1
+    failing = good.withColumn(
+        "nk", F.coalesce(F.raise_error(F.lit("injected")).cast("string"), F.col("nk"))
+    )
+    for publish in (wh.publish_delta, wh.publish):
+        with pytest.raises(Exception, match="injected"):
+            publish("dim", failing)
+        assert wh._current("dim") == 1
+        assert not os.path.exists(os.path.join(wh._tdir("dim"), "v2"))
+        assert not os.path.exists(wh._claim_path("dim", 2))
+    assert wh.publish_delta("dim", spark.createDataFrame([(1, "b")], schema)) == 2
+    assert wh.read("dim", schema).count() == 2
+
+
+def test_schema_explicit_reads_launch_no_jobs(spark, tmp_path):
+    """Building a frame over the warehouse with the declared schema is
+    pure planning: no footer-inference job for the current snapshot, a
+    time-travel version, or a bloom-pruned point lookup."""
+    from pyspark.sql import types as T
+
+    from etl__project_spark.plans.star_load import index_fact_batch, read_fact_point
+
+    dim = T.StructType(
+        [T.StructField("skey", T.LongType()), T.StructField("nk", T.StringType())]
+    )
+    fact = T.StructType([T.StructField("id", T.LongType())])
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh.publish_delta("dim", spark.createDataFrame([(0, "a")], dim))
+    wh.publish_delta("dim", spark.createDataFrame([(1, "b")], dim))
+    wh.fact_append("f", spark.range(10), "b0")
+    index_fact_batch(wh, "f", "b0", "id")
+
+    frames = []
+    assert _jobs_launched(
+        spark,
+        lambda: frames.extend(
+            [
+                wh.read("dim", dim),
+                wh.read("dim", dim, version=1),
+                read_fact_point(wh, "f", fact, "id", 3),
+            ]
+        ),
+    ) == []
+    assert [f.count() for f in frames] == [2, 1, 1]

@@ -2292,3 +2292,176 @@ def test_streaming_recluster_trigger_maintains_fact_layout(spark, tmp_path):
     q.awaitTermination(120)
     q.stop()
     assert audit(wh)["factvideostart"] == 128
+
+
+def _fact_rows_as_parsed(wh):
+    """The fact joined back to its dims, as parsed natural-key rows."""
+    from collections import Counter
+
+    from etl__project_spark.plans.star_load import DIM_SPECS, _dim_schema
+
+    fact = wh.read_fact("factvideostart", FACT_SCHEMA)
+    for table, nk, skey in DIM_SPECS:
+        fact = fact.join(wh.read(table, _dim_schema(nk, skey)), skey, "left")
+    return Counter(
+        tuple(r) for r in fact.select("datetime", "platform", "site", "video").collect()
+    )
+
+
+def _parsed_landing_rows(spark, landing):
+    from collections import Counter
+
+    from etl__project_spark.operators import parse_raw
+    from etl__project_spark.sources.readers import RAW_SCHEMA
+
+    raw = spark.read.schema(RAW_SCHEMA).option("header", True).csv(landing)
+    return Counter(
+        tuple(r)
+        for r in parse_raw(raw).select("datetime", "platform", "site", "video").collect()
+    )
+
+
+def _rollup_total(wh):
+    from pyspark.sql import functions as F
+
+    from etl__project_spark.streaming.pipeline import ROLLUP_SCHEMA
+
+    return wh.read("rollup_minute", ROLLUP_SCHEMA).agg(F.sum("n")).first()[0]
+
+
+_REPLAY_ROWS = [
+    "2017-01-11T00:00:31.000Z,Android App|video A,206",
+    "2017-01-11T00:01:01.000Z,news|video B,206",
+    "2017-01-11T00:02:10.000Z,iPad|video C,206",
+]
+
+
+def _fail_then_replay(spark, tmp_path, monkeypatch, inject):
+    """Run one micro-batch with ``inject`` patched in so it fails, then
+    restart the stream unpatched; returns the warehouse."""
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    wh_root, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+    _write_csv(os.path.join(landing, "f1.csv"), _REPLAY_ROWS)
+    with monkeypatch.context() as m:
+        inject(m)
+        q = stream_star_load(spark, landing, wh_root, ckpt, available_now=True)
+        with pytest.raises(Exception, match="injected"):
+            q.awaitTermination(120)
+        q.stop()
+    wh = ParquetWarehouse(spark, wh_root)
+    first_attempt = audit(wh)["factvideostart"]
+    _run(spark, landing, wh_root, ckpt)
+    assert _fact_rows_as_parsed(wh) == _parsed_landing_rows(spark, landing)
+    assert _rollup_total(wh) == audit(wh)["factvideostart"] == len(_REPLAY_ROWS)
+    return first_attempt
+
+
+def test_replay_after_failed_fact_append_reaches_the_fact(
+    spark, tmp_path, monkeypatch
+):
+    """A batch whose credit append landed before the failure dedups to
+    nothing on replay; the star load still runs from the landed batch
+    directory, so the day reaches the fact instead of only the rollup."""
+    real = ParquetWarehouse.fact_append
+
+    def failing(self, table, df, batch_id, layout=None):
+        if table == "factvideostart":
+            raise RuntimeError("injected fact append failure")
+        return real(self, table, df, batch_id, layout)
+
+    first = _fail_then_replay(
+        spark, tmp_path, monkeypatch,
+        lambda m: m.setattr(ParquetWarehouse, "fact_append", failing),
+    )
+    assert first == 0
+
+
+def test_replay_after_failed_branch_converges(spark, tmp_path, monkeypatch):
+    """One of the concurrent post-append branches (the rollup fold) fails
+    mid-write: its siblings still finish, the micro-batch fails, and the
+    replay folds the rollup — the failed publish released its claim."""
+    from pyspark.sql import functions as F
+
+    from etl__project_spark.streaming import pipeline
+
+    real_merge = pipeline.merge_rollups
+
+    def failing_merge(*args, **kwargs):
+        return real_merge(*args, **kwargs).withColumn(
+            "n",
+            F.coalesce(
+                F.raise_error(F.lit("injected rollup failure")).cast("long"),
+                F.col("n"),
+            ),
+        )
+
+    first = _fail_then_replay(
+        spark, tmp_path, monkeypatch,
+        lambda m: m.setattr(pipeline, "merge_rollups", failing_merge),
+    )
+    assert first == len(_REPLAY_ROWS)
+
+
+def test_streaming_tick_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """Every Spark job of one tick — including those launched from the
+    thread pools of the concurrent branches and the dim publishes —
+    carries the job group set around the tick."""
+    from etl__project_spark.sources.readers import RAW_SCHEMA
+    from etl__project_spark.streaming.pipeline import _process_batch
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    _write_csv(os.path.join(landing, "f1.csv"), _REPLAY_ROWS)
+    batch = spark.read.schema(RAW_SCHEMA).option("header", True).csv(landing)
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("one-tick", "one streaming tick")
+    try:
+        _process_batch(batch, 0, wh, spark)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(sc.statusTracker().getJobIdsForGroup("one-tick")) >= 10
+    assert audit(wh)["factvideostart"] == len(_REPLAY_ROWS)
+
+
+def test_star_tables_store_their_declared_schema(spark, tmp_path):
+    """The schemas the star load reads with are the schemas its files
+    hold (column names, order and types), so a schema-explicit read
+    returns exactly what footer inference would."""
+    from etl__project_spark.datapipe.sketches import HLL_SCHEMA
+    from etl__project_spark.plans.star_load import DIM_SPECS, _dim_schema
+    from etl__project_spark.sources.readers import RAW_SCHEMA
+    from etl__project_spark.streaming.pipeline import ROLLUP_SCHEMA
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    wh_root = str(tmp_path / "wh")
+    _write_csv(os.path.join(landing, "f1.csv"), _REPLAY_ROWS[:2])
+    _run(spark, landing, wh_root, str(tmp_path / "ckpt"))
+    _write_csv(os.path.join(landing, "f2.csv"), _REPLAY_ROWS[2:])
+    _run(spark, landing, wh_root, str(tmp_path / "ckpt"))
+
+    wh = ParquetWarehouse(spark, wh_root)
+    declared = {t: _dim_schema(nk, skey) for t, nk, skey in DIM_SPECS}
+    declared.update(
+        credit=RAW_SCHEMA,
+        factvideostart=FACT_SCHEMA,
+        rollup_minute=ROLLUP_SCHEMA,
+        hll_videotitle=HLL_SCHEMA,
+    )
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for table, schema in declared.items():
+        dirs = wh._live_dirs(table) or [
+            os.path.join(wh._tdir(table), f"v{wh._current(table)}")
+        ]
+        for d in dirs:
+            assert fields(spark.read.parquet(d).schema) == fields(schema), d
